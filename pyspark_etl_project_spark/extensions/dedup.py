@@ -28,68 +28,86 @@ from pyspark.sql import functions as F
 #: tokenization from the JVM/oracle definition.
 _JAVA_WS = re.compile(r"[ \t\n\x0B\f\r]+")
 
+#: Output rows per RecordBatch of the Arrow stages. The writer flushes
+#: at this count even inside one long document, so a worker's buffered
+#: expansion is bounded by this constant, not by docs x tokens.
+_FLUSH_ROWS = 1 << 16
+
+
+def _arrow_stage(rows_of, out_fields: list[tuple[str, str]]):
+    """mapInArrow function shared by the Arrow stages. Columns arrive
+    by POSITION (0=id, 1=text); each text is tokenized like
+    text.tokens() (F.trim strips ASCII spaces only, split on Java \\s
+    runs, empties dropped; NULL stays None) and ``rows_of(id, tokens)``
+    yields its output tuples, id first. ``out_fields`` are the (name,
+    pyarrow type) after the id, which keeps its input name and type.
+    Only nested functions run on the workers, so they need no import
+    of this package."""
+    def fn(batches):
+        import pyarrow as pa
+
+        def jvm_tokens(txt):
+            if txt is None:
+                return None
+            return [t for t in _JAVA_WS.split(txt.strip(" ")) if t]
+
+        def flush():
+            # Row-major buffer: column j is every width-th value from j.
+            return pa.RecordBatch.from_arrays(
+                [pa.array(buf[j::width], t) for j, t in enumerate(types)],
+                names=names)
+
+        width = 1 + len(out_fields)
+        limit = _FLUSH_ROWS * width
+        buf = []
+        for b in batches:
+            names = [b.schema.names[0]] + [n for n, _ in out_fields]
+            types = [b.column(0).type] + [t for _, t in out_fields]
+            for did, txt in zip(b.column(0).to_pylist(),
+                                b.column(1).to_pylist()):
+                for row in rows_of(did, jvm_tokens(txt)):
+                    buf += row
+                    if len(buf) >= limit:
+                        yield flush()
+                        buf = []
+        if buf:
+            yield flush()
+    return fn
+
 
 def _gram_hash_batches(k: int, with_n: bool):
     """mapInArrow stage replicating the JVM gram pipeline bit-for-bit:
-    tokens (trim ASCII spaces, split on Java \\s, drop empties) →
-    k-gram windows joined by ' ' → md5 hex. Emits (id, [_n,] _start,
-    _gh) per window. Python hashlib.md5 over UTF-8 bytes is the same
-    function as Spark's md5 over UTF8String bytes, so the hashes are
-    identical (verified row-for-row at all three SFs).
+    tokens (see _arrow_stage) → k-gram windows joined by ' ' → md5 hex.
+    Emits (id, [_n,] _start, _gh) per window. Python hashlib.md5 over
+    UTF-8 bytes is the same function as Spark's md5 over UTF8String
+    bytes, so the hashes are identical (verified row-for-row at all
+    three SFs).
 
     Why Python wins here (guide §4.2): the JVM path is an interpreted
     zip_with/slice/concat higher-order chain plus per-row md5 codegen;
     the Arrow path amortizes one C md5 per window with no expression
     interpretation. In-session A/B at sf0.1: 0.92 s → 0.62 s for the
-    gram stage alone. Columns arrive by POSITION: 0=id, 1=text.
+    gram stage alone.
 
     ``with_n=True`` additionally emits ONE header row per document
     (_start = -1, _gh = null, _n = token count) — every document, even
     those too short for a single window — so one text pass serves both
     the gram stream and the per-doc token counts a stats consumer
     joins back on."""
-    def fn(batches):
-        import pyarrow as pa
-        for batch in batches:
-            ids = batch.column(0)
-            id_type = ids.type
-            out_id, out_n, out_start, out_gh = [], [], [], []
-            for did, txt in zip(ids.to_pylist(),
-                                batch.column(1).to_pylist()):
-                if txt is None:
-                    # JVM parity: size(tokens(NULL)) is NULL, and NULL
-                    # text yields no gram rows (posexplode of NULL).
-                    if with_n:
-                        out_id.append(did)
-                        out_n.append(None)
-                        out_start.append(-1)
-                        out_gh.append(None)
-                    continue
-                s = txt.strip(" ")
-                w = [t for t in _JAVA_WS.split(s) if t != ""] if s else []
-                n = len(w)
-                if with_n:
-                    out_id.append(did)
-                    out_n.append(n)
-                    out_start.append(-1)
-                    out_gh.append(None)
-                for i in range(n - k + 1):
-                    out_id.append(did)
-                    if with_n:
-                        out_n.append(n)
-                    out_start.append(i)
-                    out_gh.append(hashlib.md5(
-                        " ".join(w[i:i + k]).encode()).hexdigest())
-            arrays = [pa.array(out_id, id_type)]
-            names = [batch.schema.names[0]]
-            if with_n:
-                arrays.append(pa.array(out_n, pa.int32()))
-                names.append("_n")
-            arrays += [pa.array(out_start, pa.int32()),
-                       pa.array(out_gh, pa.string())]
-            names += ["_start", "_gh"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-    return fn
+    def rows_of(did, w):
+        # JVM parity on NULL text: size(tokens(NULL)) is NULL and
+        # posexplode(NULL) yields no gram rows.
+        n = None if w is None else len(w)
+        head = (did, n) if with_n else (did,)
+        if with_n:
+            yield head + (-1, None)
+        for i in range(0 if w is None else n - k + 1):
+            gh = hashlib.md5(" ".join(w[i:i + k]).encode()).hexdigest()
+            yield head + (i, gh)
+
+    fields = [("_start", "int32"), ("_gh", "string")]
+    return _arrow_stage(rows_of,
+                        ([("_n", "int32")] if with_n else []) + fields)
 
 
 def _gram_hash_frame(df: DataFrame, id_col: str, text_col: str, k: int,
@@ -154,12 +172,12 @@ def lsh_bands(signature: Column, num_bands: int, rows_per_band: int) -> Column:
 def _banded_batches(num_hashes: int, num_bands: int, rows_per_band: int,
                     shingle_n: int):
     """mapInArrow stage replicating the shingle→minhash→band chain
-    bit-for-bit: tokens (trim ASCII spaces, split on Java \\s, drop
-    empties) → distinct ``shingle_n``-gram shingles joined by ' ' →
-    per seed k, min over md5('k|'||shingle) hex (Python str min ==
-    UTF8String binary compare on ASCII hex) → per band, md5 of the
-    '|'-joined signature slice. Docs with no shingles (NULL/short
-    text) emit nothing — the JVM chain's size(_sh) > 0 filter.
+    bit-for-bit: tokens (see _arrow_stage) → distinct ``shingle_n``-gram
+    shingles joined by ' ' → per seed k, min over md5('k|'||shingle)
+    hex (Python str min == UTF8String binary compare on ASCII hex) →
+    per band, md5 of the '|'-joined signature slice. Docs with no
+    shingles (NULL/short text) emit nothing — the JVM chain's
+    size(_sh) > 0 filter.
 
     Why Python wins here (guide §4.2): the JVM path interprets a
     transform-lambda md5 per (seed × shingle) — 8 closures walked per
@@ -167,40 +185,24 @@ def _banded_batches(num_hashes: int, num_bands: int, rows_per_band: int,
     (6.7 s worst rep vs Arrow's 1.2 s); the Arrow path is one C md5
     per (seed × distinct shingle) with no expression interpretation
     (median 0.69 → 0.52 s on the sf0.1 stream slice, identical
-    18,800-row output). Columns arrive by POSITION: 0=id, 1=text."""
-    def fn(batches):
-        import pyarrow as pa
-        prefixes = [f"{k}|".encode() for k in range(num_hashes)]
-        for batch in batches:
-            ids = batch.column(0)
-            id_type = ids.type
-            out_id, out_bid, out_bh = [], [], []
-            for did, txt in zip(ids.to_pylist(),
-                                batch.column(1).to_pylist()):
-                if txt is None:
-                    continue
-                s = txt.strip(" ")
-                w = [t for t in _JAVA_WS.split(s) if t != ""] if s else []
-                n = len(w)
-                if n < shingle_n:
-                    continue
-                grams = {" ".join(w[i:i + shingle_n]).encode()
-                         for i in range(n - shingle_n + 1)}
-                sig = [min(hashlib.md5(p + g).hexdigest() for g in grams)
-                       for p in prefixes]
-                for b in range(num_bands):
-                    out_id.append(did)
-                    out_bid.append(b)
-                    out_bh.append(hashlib.md5(
-                        "|".join(sig[b * rows_per_band:
-                                     (b + 1) * rows_per_band]).encode())
-                        .hexdigest())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, id_type),
-                 pa.array(out_bid, pa.int32()),
-                 pa.array(out_bh, pa.string())],
-                names=[batch.schema.names[0], "band_id", "band_hash"])
-    return fn
+    18,800-row output)."""
+    prefixes = [f"{k}|".encode() for k in range(num_hashes)]
+
+    def rows_of(did, w):
+        w = w or []  # NULL text: no shingles
+        grams = {" ".join(w[i:i + shingle_n]).encode()
+                 for i in range(len(w) - shingle_n + 1)}
+        if not grams:
+            return
+        sig = [min(hashlib.md5(p + g).hexdigest() for g in grams)
+               for p in prefixes]
+        for b in range(num_bands):
+            yield did, b, hashlib.md5(
+                "|".join(sig[b * rows_per_band:(b + 1) * rows_per_band])
+                .encode()).hexdigest()
+
+    return _arrow_stage(rows_of, [("band_id", "int32"),
+                                  ("band_hash", "string")])
 
 
 def banded_frame(df: DataFrame, id_col: str, text_col: str,
@@ -803,6 +805,27 @@ def cross_source_overlap(df, id_col: str, text_col: str, source_col: str,
                      .alias("containment_ppm")))
 
 
+def _dup_gram_rows(grams: DataFrame, min_count: int) -> DataFrame:
+    """The rows of a gram frame (``_gh`` = md5 of the k-gram) whose gram
+    occurs ``min_count``-or-more times in the whole frame.
+
+    Duplicated-gram marking is groupBy + left_semi, NOT a count window
+    over the gram: a window partitioned on the gram funnels every
+    occurrence of a hot gram (a boilerplate passage present in 30% of
+    docs) into ONE task with no partial aggregation and no AQE skew
+    split. The groupBy map-combines to one row per distinct gram before
+    its shuffle, and the semi join back is a join — AQE splits an
+    oversized gram partition across tasks. The shuffle key is
+    md5(gram), not the k-token string (~3x smaller shuffle, measured
+    1.4x faster end-to-end); the oracle hashes identically, so even a
+    collision (2^-128-scale) could not diverge the gate."""
+    dup_grams = (grams.groupBy("_gh")
+                 .agg(F.count(F.lit(1)).alias("_c"))
+                 .filter(F.col("_c") >= min_count)
+                 .select("_gh"))
+    return grams.join(dup_grams, "_gh", "left_semi")
+
+
 def duplicate_span_stats(df: DataFrame, id_col: str, text_col: str,
                          k: int = 8, min_count: int = 2) -> DataFrame:
     """Exact duplicated-substring-span detection (the ExactSubstr side
@@ -823,14 +846,12 @@ def duplicate_span_stats(df: DataFrame, id_col: str, text_col: str,
     mark the same token positions).
 
     Scale shape (all key-bounded):
-    1. gram-frequency pass: a map-combined groupBy on the gram string
-       (one row per distinct gram reaches the shuffle) plus a
-       left_semi join marking dup positions — a join, so a boilerplate
-       gram present in 30% of docs hits AQE's skew split instead of
-       funneling one task (a count WINDOW over the gram would). At
-       100 TB you would group on xxhash64(gram) to shrink the shuffle
-       key; the raw string is kept so the DuckDB oracle replays it
-       verbatim.
+    1. gram-frequency pass (_dup_gram_rows): a map-combined groupBy on
+       md5(gram) (one row per distinct gram reaches the shuffle) plus
+       a left_semi join marking dup positions — a join, so a
+       boilerplate gram present in 30% of docs hits AQE's skew split
+       instead of funneling one task (a count WINDOW over the gram
+       would).
     2. span merge: one shuffle on doc_id (window ordered by start).
        The "newly covered tokens" running-max trick folds interval
        merging into the same window pass — no groupBy(doc, island)
@@ -849,21 +870,7 @@ def duplicate_span_stats(df: DataFrame, id_col: str, text_col: str,
     toks = g_all.filter(F.col("_start") == -1).select(id_col, "_n")
     grams = g_all.filter(F.col("_start") >= 0).select(id_col, "_start",
                                                       "_gh")
-    # Duplicated-gram marking is groupBy + left_semi, NOT a count
-    # window over the gram: a window partitioned on the gram funnels
-    # every occurrence of a hot gram (a boilerplate passage present in
-    # 30% of docs) into ONE task with no partial aggregation and no
-    # AQE skew split. The groupBy map-combines to one row per distinct
-    # gram before its shuffle, and the semi join back is a join — AQE
-    # splits an oversized gram partition across tasks. The shuffle key
-    # is md5(gram), not the k-token string (~3x smaller shuffle,
-    # measured 1.4x faster end-to-end); the oracle hashes identically,
-    # so even a collision (2^-128-scale) could not diverge the gate.
-    dup_grams = (grams.groupBy("_gh")
-                 .agg(F.count(F.lit(1)).alias("_c"))
-                 .filter(F.col("_c") >= min_count)
-                 .select("_gh"))
-    dup = grams.join(dup_grams, "_gh", "left_semi").drop("_gh")
+    dup = _dup_gram_rows(grams, min_count).drop("_gh")
     w_doc = (Window.partitionBy(id_col).orderBy("_start")
              .rowsBetween(Window.unboundedPreceding, -1))
     # -2 sentinel: a real previous span can end at -1 + k - 1 >= 0, so
@@ -902,9 +909,10 @@ def duplicate_span_scrub(df: DataFrame, id_col: str, text_col: str,
     duplicate_span_stats) is dropped and the survivors are rejoined in
     order. Returns (id, clean_text, n_tokens, kept_tokens).
 
-    Scale shape: dup-gram marking is the same single gram-keyed window
-    shuffle as duplicate_span_stats; covered positions explode k rows
-    per dup gram (bounded blowup, k is a small constant) and distinct
+    Scale shape: dup-gram marking is the same map-combined groupBy +
+    left_semi as duplicate_span_stats (_dup_gram_rows); covered
+    positions explode k rows per dup gram (bounded blowup, k is a
+    small constant) and distinct
     on (doc, pos) reuses the doc-keyed shuffle; the surviving-token
     reassembly is a left-anti join plus one groupBy(doc) — sort_array
     on (pos, token) structs rebuilds order without a window. All
@@ -917,14 +925,7 @@ def duplicate_span_scrub(df: DataFrame, id_col: str, text_col: str,
     # are still needed JVM-side below for the position explode).
     grams = (_gram_hash_frame(df, id_col, text_col, k, with_n=False)
              .localCheckpoint(eager=False))
-    # Same skew-safe md5-keyed marking as duplicate_span_stats:
-    # map-combined gram counts + left_semi, never a gram-partitioned
-    # count window.
-    dup_grams = (grams.groupBy("_gh")
-                 .agg(F.count(F.lit(1)).alias("_c"))
-                 .filter(F.col("_c") >= min_count)
-                 .select("_gh"))
-    covered = (grams.join(dup_grams, "_gh", "left_semi")
+    covered = (_dup_gram_rows(grams, min_count)
                .select(id_col,
                        F.explode(
                            F.sequence(F.col("_start"),

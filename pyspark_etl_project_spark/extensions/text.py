@@ -78,25 +78,6 @@ def word_ngrams(col: Column | str, n: int) -> Column:
     return ngram_array(tokens(c), n)
 
 
-def dup_ngram_bp(col: Column | str, n: int = 2) -> Column:
-    """Duplicate n-gram fraction in integer basis points — the
-    Gopher-style repetition signal (high value = the document repeats
-    itself). Integer math end-to-end so the cut is engine-exact."""
-    g = word_ngrams(col, n)
-    return F.when(
-        F.size(g) > 0,
-        F.floor((F.size(g) - F.size(F.array_distinct(g))).cast("bigint")
-                * 10000 / F.size(g)).cast("bigint")
-    ).otherwise(F.lit(0).cast("bigint"))
-
-
-def avg_token_length(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    t = tokens(c)
-    total = F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
-    return total.cast("double") / F.size(t)
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Punctuation characters / total characters."""
     c = F.col(col) if isinstance(col, str) else col
@@ -129,14 +110,8 @@ def quality_score(col: Column | str,
 def lang_id(col: Column | str) -> Column:
     """Stopword-marker language guess; 'und' (undetermined) when no
     marker list matches."""
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    t = tokens(c)
-    expr = F.lit("und")
-    for lang, markers in reversed(list(LANG_MARKERS.items())):
-        sw = F.array(*[F.lit(w) for w in markers])
-        hit = F.size(F.filter(t, lambda x: F.array_contains(sw, x))) > 0
-        expr = F.when(hit, F.lit(lang)).otherwise(expr)
-    return expr
+    c = F.col(col) if isinstance(col, str) else col
+    return lang_id_from_tokens(tokens(F.lower(c)))
 
 
 def normalized_fingerprint(col: Column | str) -> Column:
@@ -356,9 +331,9 @@ def winnowing_fingerprints(df, id_col: str, text_col: str,
 
 
 def lang_id_from_tokens(tok_col: Column | str) -> Column:
-    """lang_id over an already-staged lowercased token array — use when
-    the array is a named column so it's computed once per row (a fused
-    lang_id(text) re-splits the text for every marker probe)."""
+    """lang_id over a lowercased token array — the one marker formula;
+    pass a named staged column to compute the array once per row and
+    share it with other signals (lang_id passes it inline)."""
     t = F.col(tok_col) if isinstance(tok_col, str) else tok_col
     expr = F.lit("und")
     for lang, markers in reversed(list(LANG_MARKERS.items())):
@@ -368,8 +343,10 @@ def lang_id_from_tokens(tok_col: Column | str) -> Column:
 
 
 def dup_bp_from_ngrams(gram_col: Column | str) -> Column:
-    """dup_ngram_bp over an already-staged n-gram array column (same
-    staging rationale as lang_id_from_tokens)."""
+    """Duplicate n-gram fraction in integer basis points over an n-gram
+    array (e.g. word_ngrams(text, n)) — the Gopher-style repetition
+    signal (high value = the document repeats itself). Integer math
+    end-to-end so the cut is engine-exact."""
     g = F.col(gram_col) if isinstance(gram_col, str) else gram_col
     return F.when(
         F.size(g) > 0,
@@ -469,16 +446,6 @@ def alnum_tokens(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(F.lower(c), ALNUM_TOKEN_RE),
                     lambda x: x != "")
-
-
-def corpus_token_frequencies(df, text_col: str):
-    """Global (token, freq) table: explode + groupBy. Partial (map-side)
-    aggregation absorbs the per-document token multiplicity before the
-    shuffle, so shuffle rows ~ distinct tokens per partition — at 100 TB
-    the exchange carries the vocabulary, not the corpus."""
-    return (df.select(F.explode(alnum_tokens(text_col)).alias("token"))
-              .groupBy("token")
-              .agg(F.count(F.lit(1)).alias("freq")))
 
 
 def rare_token_scores(df, id_col: str, text_col: str,
@@ -773,7 +740,7 @@ def ngram_novelty(df, text_col: str, group_col: str, n: int = 3):
     n-grams, with novelty = distinct/total in integer ppm. The corpus
     self-repetition diagnostic (a crawl that re-serves the same pages
     under one source scores low) — the corpus-level complement of the
-    per-doc dup_ngram_bp signal.
+    per-doc dup_bp_from_ngrams signal.
 
     Scale: one explode then a two-level aggregate; Spark plans the
     COUNT DISTINCT as partial-agg on (group, gram) before the final

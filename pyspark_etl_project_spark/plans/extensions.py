@@ -1641,9 +1641,9 @@ def curation_pipeline_full_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feature width; the extra feature CPU spent on rows the window
     # then drops is bounded by the dup fraction). The arrays are staged
     # as named columns so each is computed once per row (CollapseProject
-    # keeps non-cheap multiply-referenced expressions staged); a fused
-    # X.dup_ngram_bp("text") rebuilds its gram array 3x per row and
-    # re-splits the text each time.
+    # keeps non-cheap multiply-referenced expressions staged); passing
+    # X.word_ngrams("text", 2) inline to X.dup_bp_from_ngrams would
+    # rebuild the gram array 3x per row and re-split the text each time.
     staged = docs.select(
         "doc_id",
         X.normalized_fingerprint("text").alias("fingerprint"),

@@ -106,8 +106,9 @@ def salted_skew_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- rollup aggregation (subtotals + grand total in one pass) -------------
 # Beyond-reference breadth: the reference has no grouping sets
-# (SURVEY.md §2.D note). Spark expands ROLLUP into one Expand + single
-# shuffle — subtotal layers do NOT rescan the fact table.
+# (SURVEY.md §2.D note). The fact table is aggregated once at the finest
+# level; the subtotal layers re-aggregate that tiny intermediate and
+# never rescan the fact table.
 
 @_q("rollup_flag_status", """
 SELECT l_returnflag, l_linestatus,
@@ -138,7 +139,10 @@ def rollup_flag_status_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def level(cols: list[str]) -> DataFrame:
         g = fine.groupBy(*cols) if cols else fine.groupBy()
-        out = g.agg(F.sum("_n").cast("long").alias("n_rows"),
+        # coalesce: on empty input the grand-total row counts 0 rows,
+        # as COUNT(*) under GROUP BY ROLLUP does (SUM stays NULL).
+        out = g.agg(F.coalesce(F.sum("_n"), F.lit(0)).cast("long")
+                     .alias("n_rows"),
                     F.floor(F.sum("_q") * 100).cast("long")
                      .alias("qty_cents"))
         for c in ("l_returnflag", "l_linestatus"):

@@ -101,6 +101,16 @@ def test_text_funcs(spark):
     df2 = spark.createDataFrame([("the  CAT and THE hat ",)], "t string")
     fp2 = df2.select(normalized_fingerprint("t").alias("fp")).first()["fp"]
     assert fp2 == row["fp"]  # case/whitespace-insensitive collision by design
+    # lang_id edge rows: NULL, empty and marker-free text are all 'und';
+    # markers match case-insensitively, first list (en) wins a tie.
+    edge = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "cat hat bat"),
+         (5, "DER Hund"), (6, "la casa y el perro"), (7, "die and the")],
+        "id long, t string")
+    got = {r["id"]: r["lang"] for r in
+           edge.select("id", lang_id("t").alias("lang")).collect()}
+    assert got == {1: "und", 2: "und", 3: "und", 4: "und", 5: "de",
+                   6: "es", 7: "en"}
 
 
 def test_multimodal_media_column_and_features(spark):
@@ -270,7 +280,8 @@ def test_batched_topk_matches_per_query_brute_force(spark):
 
 
 def test_dup_ngram_bp_values(spark):
-    from pyspark_etl_project_spark.extensions.text import dup_ngram_bp
+    from pyspark_etl_project_spark.extensions.text import (
+        dup_bp_from_ngrams, word_ngrams)
 
     df = spark.createDataFrame(
         [(1, "a b a b a"),     # 2-grams: [a b, b a, a b, b a] -> 2 dups of 4
@@ -279,7 +290,8 @@ def test_dup_ngram_bp_values(spark):
          (4, "")],
         "id long, t string")
     got = {r["id"]: r["bp"] for r in
-           df.select("id", dup_ngram_bp("t", 2).alias("bp")).collect()}
+           df.select("id", dup_bp_from_ngrams(word_ngrams("t", 2))
+                     .alias("bp")).collect()}
     assert got == {1: 5000, 2: 0, 3: 0, 4: 0}
 
 
@@ -1948,6 +1960,20 @@ def test_compact_small_files_range_preserves_evolved_column(
             back.filter(F.col("id") == 100).collect()] == ["late"]
 
 
+# Unicode whitespace is a TOKEN character for Java \s (ASCII-only
+# without UNICODE_CHARACTER_CLASS) and F.trim strips ASCII spaces only,
+# while Python's str.split()/\s would split on all of these.
+_UNICODE_WS_ROWS = [
+    (101, "a\u00a0b c d e"),                  # NBSP inside a token
+    (102, "one\u2003two three four"),          # EM SPACE
+    (103, "x\u3000y z w v"),                   # IDEOGRAPHIC SPACE
+    (104, "p\u0085q r s t"),                   # NEXT LINE (NEL)
+    (105, "\u00a0lead and trail\u00a0"),       # NBSP at both ends
+    # multi-byte UTF-8 tokens (2-, 3- and 4-byte), repeated for dup grams
+    (106, "caf\u00e9 \u4e2d\u6587 \U0001F600 caf\u00e9 \u4e2d\u6587"),
+]
+
+
 def test_arrow_gram_stage_matches_jvm_expression(spark):
     """The r18 mapInArrow gram stage must replicate the JVM
     tokenize->k-gram->md5 chain BIT-FOR-BIT, including the whitespace
@@ -1955,9 +1981,10 @@ def test_arrow_gram_stage_matches_jvm_expression(spark):
     class [ \\t\\n\\x0B\\f\\r] (Python \\s would also match unicode
     whitespace), k-grams join with ' ', md5 over UTF-8 bytes. Probes
     every edge class: tabs/newlines/vertical-tab separators, unicode
-    NBSP (a TOKEN character in Java \\s terms), leading/trailing
-    whitespace, empty and whitespace-only docs, docs shorter than k,
-    NULL text, and multi-space runs."""
+    whitespace (a TOKEN character in Java \\s terms; _UNICODE_WS_ROWS),
+    multi-byte UTF-8 tokens, leading/trailing whitespace, empty and
+    whitespace-only docs, docs shorter than k, NULL text, and
+    multi-space runs."""
     from pyspark.sql import functions as F
 
     from pyspark_etl_project_spark.extensions.dedup import (
@@ -1977,7 +2004,7 @@ def test_arrow_gram_stage_matches_jvm_expression(spark):
         (8, "one two"),          # shorter than k
         (9, None),
         (10, "dup dup dup dup"),
-    ]
+    ] + _UNICODE_WS_ROWS
     df = spark.createDataFrame(rows, "doc_id long, text string")
     jvm = (df.select("doc_id",
                      tokens(F.col("text")).alias("_w"))
@@ -2020,7 +2047,7 @@ def test_arrow_banded_frame_matches_jvm_expression(spark):
         (1, "a b c d e"),
         (2, "a\tb\nc\x0bd\fe\rf"),
         (3, "  padded   with\t\tspaces  "),
-        (4, "nbsp is not a separator here x y"),
+        (4, "plain ascii words here x y"),
         (5, ""),
         (6, "   "),
         (7, "\t\n"),
@@ -2028,7 +2055,7 @@ def test_arrow_banded_frame_matches_jvm_expression(spark):
         (9, None),                 # NULL text: no bands
         (10, "dup dup dup dup"),   # duplicate shingles collapse
         (11, "x y z"),             # exactly one shingle
-    ]
+    ] + _UNICODE_WS_ROWS
     df = spark.createDataFrame(rows, "doc_id long, text string")
     num_hashes, num_bands, shingle_n = 8, 4, 3
     rpb = _rows_per_band(num_hashes, num_bands)
@@ -2049,5 +2076,86 @@ def test_arrow_banded_frame_matches_jvm_expression(spark):
     got = sorted(map(tuple, arrow.collect()))
     want = sorted(map(tuple, jvm.collect()))
     assert got == want
-    # The admission filter must have kept the short/NULL/empty docs out.
-    assert {t[0] for t in got} == {1, 2, 3, 4, 10, 11}
+    # The admission filter must have kept the short/NULL/empty docs out
+    # (the unicode-whitespace rows each hold >= 3 JVM tokens).
+    assert {t[0] for t in got} == ({1, 2, 3, 4, 10, 11}
+                                   | {r[0] for r in _UNICODE_WS_ROWS})
+
+
+def test_arrow_stages_flush_bounded_batches(monkeypatch):
+    """Both Arrow stages write at most _FLUSH_ROWS rows per RecordBatch
+    — flushing inside one long document, so worker memory is bounded
+    by that constant, not by docs x tokens — and chunking never changes
+    the output: a document of ~3 x _FLUSH_ROWS tokens (plus a NULL
+    one) yields the same rows as with the bound lifted. Pure pyarrow:
+    the stage functions are called directly, no Spark session."""
+    import pyarrow as pa
+
+    from pyspark_etl_project_spark.extensions import dedup
+
+    limit = dedup._FLUSH_ROWS
+    text = " ".join(f"w{i % 1000}" for i in range(3 * limit))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([7, 8], pa.int64()), pa.array([text, None])],
+        names=["doc_id", "text"])
+    stages = {"grams+n": lambda: dedup._gram_hash_batches(8, True),
+              "grams": lambda: dedup._gram_hash_batches(8, False),
+              "bands": lambda: dedup._banded_batches(8, 4, 2, 3)}
+    for name, make in stages.items():
+        chunked = list(make()([batch]))
+        assert all(b.num_rows <= limit for b in chunked), name
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_FLUSH_ROWS", 1 << 30)
+            whole = list(make()([batch]))
+        assert len(whole) == 1, name
+        assert (pa.Table.from_batches(chunked)
+                .equals(pa.Table.from_batches(whole))), name
+        if name != "bands":
+            # ~3 x limit gram rows from ONE document: flushed mid-doc.
+            assert len(chunked) >= 3, (name, len(chunked))
+
+
+def test_rollup_flag_status_empty_input_matches_native_rollup(spark,
+                                                              tmp_path):
+    """The Expand-free rollup must keep native GROUP BY ROLLUP semantics
+    on an EMPTY fact table: the grand-total row still appears with
+    COUNT(*) = 0 (the re-aggregated SUM of the empty finest level would
+    be NULL) and the quantity sum stays NULL. Compared against the
+    registered oracle SQL, which runs the native ROLLUP."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from pyspark_etl_project_spark.plans.join_plans import (
+        rollup_flag_status_q)
+
+    sf = str(tmp_path / "sf")
+    spark.createDataFrame(
+        [], "l_returnflag string, l_linestatus string, "
+            "l_quantity decimal(15,2)") \
+        .write.parquet(sf + "/lineitem.parquet")
+
+    got = [tuple(r) for r in rollup_flag_status_q(spark, sf).collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM "
+                f"'{sf}/lineitem.parquet/*.parquet'")
+    want = con.execute(entry.oracle_sql()["rollup_flag_status"]).fetchall()
+    assert got == want == [(None, None, 0, None)]
+
+
+def test_ivf_cell_sql_path_escapes_backticks(spark):
+    """ivf_cell's column-NAME fast path interpolates the name into SQL;
+    a name containing a backtick must be quoted (doubled backtick), and
+    the result must equal the Column-built expression."""
+    from pyspark_etl_project_spark.extensions.similarity import ivf_cell
+
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, 0.0])]
+    odd = "emb`x"
+    df = spark.createDataFrame(
+        [(1, [0.9, 0.1]), (2, [0.1, 0.9]), (3, [-0.8, 0.3])],
+        "vec_id long, embedding array<double>") \
+        .withColumn(odd, F.col("embedding"))
+    got = [(r["vec_id"], r["a"], r["b"]) for r in
+           df.select("vec_id", ivf_cell(odd, cents).alias("a"),
+                     ivf_cell(F.col("embedding"), cents).alias("b"))
+           .orderBy("vec_id").collect()]
+    assert got == [(1, 0, 0), (2, 1, 1), (3, 2, 2)]

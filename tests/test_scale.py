@@ -536,11 +536,16 @@ def test_vacuum_stats_scan_reads_only_end_date(spark, tmp_path):
 
 
 def test_cross_source_overlap_hash_join_never_sortmerge(spark):
-    """The fingerprint self-join is hinted shuffle_hash: both sides are
-    large and already keyed on the fingerprint, so the plan must use a
-    ShuffledHashJoin (no sort passes) and broadcast the tiny per-source
-    totals — SortMergeJoin on the fp or a nested loop would resurrect
-    the sort/cartesian cost the operator is shaped to avoid."""
+    """The fingerprint side of cross_source_overlap is ONE aggregation
+    per fingerprint (collect_set of sources), so no join may be keyed
+    on the fingerprint at all: the source-pair counts derive from the
+    per-fp frame by explode, and the only joins left attach the tiny
+    per-source totals — every one must be a BroadcastHashJoin. A
+    SortMergeJoin (sort passes), a fingerprint-keyed join (the former
+    (src, fp) self-join) or a nested loop would resurrect the
+    sort/cartesian cost the operator is shaped to avoid."""
+    import re
+
     from pyspark_etl_project_spark.extensions.dedup import cross_source_overlap
     from pyspark_etl_project_spark.plans.tables import load
 
@@ -548,10 +553,16 @@ def test_cross_source_overlap_hash_join_never_sortmerge(spark):
         "doc_id", "text", "source")
     plan = _formatted_plan(cross_source_overlap(docs, "doc_id", "text",
                                                 "source"))
-    assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # Every join node's detail block: its name and its key lines.
+    joins = re.findall(r"^\(\d+\) (\w*Join)\n(.*?)(?:\n\n|\Z)", plan,
+                       re.M | re.S)
+    assert len(joins) >= 2, plan
+    for name, detail in joins:
+        assert name == "BroadcastHashJoin", (name, detail)
+        assert not re.search(r"\bfp#", detail), detail
 
 
 def test_triangle_count_never_plans_a_cartesian(spark):

@@ -11,7 +11,7 @@ whose cost is build-side jobs needs a different fix (fewer passes /
 cheaper maintenance) than one whose cost is the final plan's execution
 (shuffles / join strategy / Python boundary).
 
-Usage: python tools/profile_queries.py [query ...]   (default: top-cost set)
+Usage: python tools/profile_queries.py [query ...]   (default: bench.HEADLINE)
 Writes JSON to stdout, one line per query, then a sorted summary.
 """
 
@@ -24,35 +24,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-DEFAULT = [
-    "streaming_band_index_dedup",
-    "etl_csv_pipeline_full",
-    "etl_json_pipeline_full",
-    "dedup_cluster_canonical",
-    "partial_stats_merge",
-    "leakage_safe_split_counts",
-    "embedding_ivf_topk",
-    "cross_source_overlap",
-    "compaction_roundtrip",
-    "streaming_window_agg",
-    "hard_negative_mining_ann",
-    "mad_length_outliers",
-    "boilerplate_line_scrub",
-    "dup_span_stats",
-    "bpe_encode_token_counts",
-    "winnowing_contamination",
-    "bpe_train_merges",
-    "curation_pipeline_full",
-    "kmv_distinct_sketch_trigrams",
-    "doc_fingerprint_winnowing",
-    "ann_recall_calibration",
-    "pagerank_doc_links",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = sys.argv[1:] or DEFAULT
+    from bench import HEADLINE
+    names = sys.argv[1:] or HEADLINE
     reps = int(os.environ.get("PROFILE_REPS", "2"))
 
     from pyspark_etl_project_spark.plans import all_queries
